@@ -13,13 +13,17 @@ declarative DataFrame transformation:
   delta_to_postgres_scd.py:232-239) is an invariant checked by
   ``scd2_invariant_violations``.
 
-Scale posture: the merge is a single full-outer join on the business keys —
-shuffle-partitioned by key, skew-handled by AQE, no driver-side collection.
-Source batches are deduped on the business keys first (the reference would
-violate its unique index on intra-batch dupes; SURVEY.md §7.7-2). With a
-Delta-enabled cluster the same plan maps to ``DeltaTable.merge`` +
-append; the Parquet-backed ``sync_scd2`` below rewrites the target, which
-is the correct local-mode stand-in.
+Scale posture: the merge is a single full-outer join of the current rows
+with the batch on the business keys — shuffle-partitioned by key, skew-
+handled by AQE, no driver-side collection — and one projection that emits
+each joined row's untouched, closed and fresh versions (``inline`` of a
+filtered two-element array); history rows pass through unread by the
+join. Source batches are deduped on the business keys first (the reference
+would violate its unique index on intra-batch dupes; SURVEY.md §7.7-2).
+With a Delta-enabled cluster the same plan maps to ``DeltaTable.merge`` +
+append; the Parquet-backed ``sync_scd2`` below writes the new state once
+into a staging directory and swaps it in (one Spark job, counts observed
+on that write), which is the correct local-mode stand-in.
 
 Surrogate key: the reference's ``scd_id SERIAL`` is insertion-ordered;
 a distributed engine cannot cheaply maintain a global counter, so the
@@ -31,9 +35,11 @@ surrogate is derived deterministically at read time via
 from __future__ import annotations
 
 import os
+import shutil
+import uuid
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 SCD_COLS = ("effective_date", "end_date", "is_current", "created_at", "updated_at")
@@ -75,62 +81,48 @@ def scd2_apply(
         .drop("__rn")
     )
 
+    def fresh(prefix: str) -> list[Column]:
+        """An incoming row as a new current version."""
+        return [
+            *[F.col(f"{prefix}{c}").alias(c) for c in payload_cols],
+            effective_ts.alias("effective_date"),
+            F.lit(None).cast("timestamp").alias("end_date"),
+            F.lit(True).alias("is_current"),
+            effective_ts.alias("created_at"),
+            effective_ts.alias("updated_at"),
+        ]
+
     if target is None:
-        return source.select(
-            *payload_cols,
-            effective_ts.alias("effective_date"),
-            F.lit(None).cast("timestamp").alias("end_date"),
-            F.lit(True).alias("is_current"),
-            effective_ts.alias("created_at"),
-            effective_ts.alias("updated_at"),
-        )
+        return source.select(*fresh(""))
 
-    history = target.filter(~F.col("is_current"))
-    current = target.filter(F.col("is_current"))
-
+    cur_present = F.col(f"cur.{business_keys[0]}").isNotNull()
+    src_present = F.col(f"src.{business_keys[0]}").isNotNull()
+    closing = cur_present & src_present & _any_changed(tracked_cols, "cur", "src")
+    # Per joined row, up to two output rows: the current row (untouched, or
+    # closed when the incoming row differs — reference stmt 1) and the
+    # incoming row as the new current version (new key, or changed —
+    # reference stmt 2; DO NOTHING drops unchanged incoming rows).
+    cur_row = F.when(
+        cur_present,
+        F.struct(
+            *[F.col(f"cur.{c}").alias(c) for c in payload_cols],
+            F.col("cur.effective_date").alias("effective_date"),
+            F.when(closing, effective_ts).otherwise(F.col("cur.end_date")).alias("end_date"),
+            (~closing).alias("is_current"),
+            F.col("cur.created_at").alias("created_at"),
+            F.when(closing, effective_ts).otherwise(F.col("cur.updated_at")).alias("updated_at"),
+        ),
+    )
+    fresh_row = F.when(src_present & (closing | ~cur_present), F.struct(*fresh("src.")))
     key_eq = [F.col(f"cur.{k}") == F.col(f"src.{k}") for k in business_keys]
-    joined = current.alias("cur").join(
-        source.alias("src"), on=key_eq, how="full_outer"
+    versions = (
+        target.filter(F.col("is_current"))
+        .alias("cur")
+        .join(source.alias("src"), on=key_eq, how="full_outer")
+        .select(F.inline(F.filter(F.array(cur_row, fresh_row), lambda r: r.isNotNull())))
     )
-
-    changed = _any_changed(tracked_cols, "cur", "src")
-    src_key_null = F.col(f"src.{business_keys[0]}").isNull()
-    cur_key_null = F.col(f"cur.{business_keys[0]}").isNull()
-
-    # Current rows that survive untouched: no incoming row, or incoming row equal.
-    untouched = joined.filter(~cur_key_null & (src_key_null | ~changed)).select("cur.*")
-
-    # Current rows closed because the incoming row differs (reference stmt 1).
-    closed = (
-        joined.filter(~cur_key_null & ~src_key_null & changed)
-        .select("cur.*")
-        .withColumn("end_date", effective_ts)
-        .withColumn("is_current", F.lit(False))
-        .withColumn("updated_at", effective_ts)
-    )
-
-    # Incoming rows that become the new current version: new key, or changed
-    # (reference stmt 2 — DO NOTHING drops unchanged incoming rows).
-    fresh = (
-        joined.filter(~src_key_null & (cur_key_null | changed))
-        .select("src.*")
-        .select(
-            *payload_cols,
-            effective_ts.alias("effective_date"),
-            F.lit(None).cast("timestamp").alias("end_date"),
-            F.lit(True).alias("is_current"),
-            effective_ts.alias("created_at"),
-            effective_ts.alias("updated_at"),
-        )
-    )
-
     cols = payload_cols + list(SCD_COLS)
-    return (
-        history.select(*cols)
-        .unionByName(untouched.select(*cols))
-        .unionByName(closed.select(*cols))
-        .unionByName(fresh.select(*cols))
-    )
+    return target.filter(~F.col("is_current")).select(*cols).unionByName(versions)
 
 
 def with_surrogate_key(scd: DataFrame, business_keys: Sequence[str]) -> DataFrame:
@@ -151,30 +143,38 @@ def sync_scd2(
 ) -> dict:
     """Materializing sync (reference orchestrator delta_to_postgres_scd.py:269-337).
 
-    Reads the Parquet/Delta target if present, applies the SCD2 transition,
-    rewrites the target, returns a summary dict like the reference's.
+    Reads the Parquet target if present, applies the SCD2 transition and
+    writes the new state once, into a sibling staging directory that then
+    replaces the target by rename. One Spark job: the target is read with
+    the schema this sync writes (no footer-inference job), and the summary
+    counts are observed metrics of that same write. A failed write leaves
+    the previous target as it was and removes the staging directory.
     """
     effective_ts = effective_ts if effective_ts is not None else F.current_timestamp()
-    target = None
+    args = (business_keys, tracked_cols, effective_ts, column_mapping)
+    result = scd2_apply(None, source, *args)
     if os.path.exists(target_path):
-        target = spark.read.parquet(target_path)
-    result = scd2_apply(
-        target, source, business_keys, tracked_cols, effective_ts, column_mapping
+        target = spark.read.schema(result.schema).parquet(target_path)
+        result = scd2_apply(target, source, *args)
+    counts = Observation()
+    result = result.observe(
+        counts,
+        F.count(F.lit(1)).alias("total_rows"),
+        F.count_if(F.col("is_current")).alias("current_rows"),
     )
-    # Local-mode materialization: the lineage references the files being
-    # replaced, so stage via an in-memory copy before overwrite.
-    result.persist()
+    base = os.path.normpath(target_path)
+    token = uuid.uuid4().hex[:12]
+    staging, retired = f"{base}._staging_{token}", f"{base}._retired_{token}"
     try:
-        result.count()
-        result.write.mode("overwrite").parquet(target_path)
-    finally:
-        result.unpersist()
-    out = spark.read.parquet(target_path)
-    return {
-        "target_path": target_path,
-        "total_rows": out.count(),
-        "current_rows": out.filter(F.col("is_current")).count(),
-    }
+        result.write.parquet(staging)
+    except BaseException:
+        shutil.rmtree(staging, ignore_errors=True)
+        raise
+    if os.path.exists(base):
+        os.rename(base, retired)
+    os.rename(staging, base)
+    shutil.rmtree(retired, ignore_errors=True)
+    return {"target_path": target_path, **counts.get}
 
 
 def scd2_invariant_violations(scd: DataFrame, business_keys: Sequence[str]) -> dict:

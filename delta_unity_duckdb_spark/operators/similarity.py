@@ -168,7 +168,12 @@ def ivf_topk(
     query vectors) fall back to the expression form."""
     import numpy as np
 
-    crows = _ivf_centroids(embeddings, nlist, id_col, vec_col).collect()
+    # collect() order is not part of the contract: order by cid so row i
+    # of the stacked matrix is centroid i + 1
+    crows = sorted(
+        _ivf_centroids(embeddings, nlist, id_col, vec_col).collect(),
+        key=lambda r: r["cid"],
+    )
     qrows = query.limit(2).collect()
 
     def _clean(v, dim=None):
@@ -197,7 +202,7 @@ def ivf_topk(
         )
 
     dim = len(qvec)
-    C = np.stack(cvecs)  # (nc, dim), cids are 1..nc in row order
+    C = np.stack(cvecs)  # (nc, dim), row i is cid i + 1
     nc = len(C)
     cn = np.zeros(nc)
     qn = 0.0

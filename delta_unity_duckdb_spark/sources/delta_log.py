@@ -32,7 +32,9 @@ import time
 import uuid
 from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -67,10 +69,6 @@ def _file_stats_json(path: str) -> str | None:
     size). Columns whose chunks lack statistics (or carry types we don't
     normalize) are simply omitted — skipping is advisory, absence is safe.
     """
-    try:
-        import pyarrow.parquet as pq
-    except Exception:  # pragma: no cover - pyarrow is baked in
-        return None
     try:
         meta = pq.ParquetFile(path).metadata
     except Exception:
@@ -280,25 +278,77 @@ class DeltaSnapshot:
         # commitInfo / txn / cdc: no effect on the active file set
 
 
-def _load_checkpoint(
-    spark: SparkSession, log_dir: str, version: int, snap: DeltaSnapshot
-) -> None:
-    """Fold a parquet checkpoint (complete state at ``version``) into snap."""
+_STR = pa.string()
+_STR_MAP = pa.map_(_STR, _STR)
+
+# The checkpoint file layout: one struct column per action kind, Spark's
+# nullable-everything parquet shape (maps as key_value groups, lists as
+# 3-level lists), so Spark and DuckDB read it like a Spark-written one.
+_CHECKPOINT_SCHEMA = pa.schema(
+    {
+        "protocol": pa.struct({"minReaderVersion": pa.int32(), "minWriterVersion": pa.int32()}),
+        "metaData": pa.struct(
+            {
+                "id": _STR,
+                "name": _STR,
+                "description": _STR,
+                "format": pa.struct({"provider": _STR, "options": _STR_MAP}),
+                "schemaString": _STR,
+                "partitionColumns": pa.list_(_STR),
+                # configuration MUST round-trip through checkpoints: CHECK
+                # constraints live in delta.constraints.* keys, and a
+                # snapshot rebuilt from a checkpoint that dropped them
+                # would silently stop enforcing
+                "configuration": _STR_MAP,
+                "createdTime": pa.int64(),
+            }
+        ),
+        "add": pa.struct(
+            {
+                "path": _STR,
+                "partitionValues": _STR_MAP,
+                "size": pa.int64(),
+                "modificationTime": pa.int64(),
+                "dataChange": pa.bool_(),
+                "stats": _STR,
+            }
+        ),
+    }
+)
+
+
+def _as_json_value(value, typ: pa.DataType):
+    """A pyarrow ``to_pylist`` value as the log's JSON shape: maps (lists
+    of key/value tuples there) become dicts, in nested structs too."""
+    if value is None:
+        return None
+    if pa.types.is_map(typ):
+        return {k: _as_json_value(v, typ.item_type) for k, v in value}
+    if pa.types.is_struct(typ):
+        return {f.name: _as_json_value(value[f.name], f.type) for f in typ}
+    return value
+
+
+def _load_checkpoint(log_dir: str, version: int, snap: DeltaSnapshot) -> None:
+    """Fold a parquet checkpoint (complete state at ``version``) into snap,
+    read by pyarrow on the driver — ours or another writer's."""
     path = os.path.join(
         log_dir, f"{version:0{_COMMIT_DIGITS}d}.checkpoint.parquet"
     )
-    rows = spark.read.parquet(path).collect()
+    pf = pq.ParquetFile(path)
+    kinds = [k for k in ("protocol", "metaData", "add", "remove") if k in pf.schema_arrow.names]
+    table = pf.read(columns=kinds)
+    types = {k: table.schema.field(k).type for k in kinds}
     # Checkpoints store one action per row in struct columns; replay order
     # inside a checkpoint is irrelevant (it is already reconciled state),
     # but metaData/protocol must land before being read.
-    for r in rows:
-        d = r.asDict(recursive=True)
-        for key in ("protocol", "metaData", "add", "remove"):
-            sub = d.get(key)
+    for row in table.to_pylist():
+        for key in kinds:
+            sub = row[key]
             # a checkpoint row holds ONE action; the other struct columns
             # are null — which some writers serialize as all-null structs
             if sub is not None and any(v is not None for v in sub.values()):
-                snap._apply({key: sub})
+                snap._apply({key: _as_json_value(sub, types[key])})
 
 
 def snapshot(
@@ -325,7 +375,7 @@ def snapshot(
 
     snap = DeltaSnapshot(table_path, version)
     if ckpt_version >= 0:
-        _load_checkpoint(spark, log_dir, ckpt_version, snap)
+        _load_checkpoint(log_dir, ckpt_version, snap)
 
     for v in range(ckpt_version + 1, version + 1):
         cpath = _commit_path(log_dir, v)
@@ -489,6 +539,26 @@ def table_version(table_path: str) -> int:
 
 def _schema_to_string(schema: StructType) -> str:
     return json.dumps(schema.jsonValue())
+
+
+def _commit_payload(actions: list[dict]) -> str:
+    return "\n".join(json.dumps(a, separators=(",", ":")) for a in actions) + "\n"
+
+
+def _commit_next(table_path: str, read_version: int, actions: list[dict]) -> int:
+    """Commit ``actions`` as ``read_version + 1`` with an exclusive create.
+    Losing the race raises instead of retrying: the actions were derived
+    from ``read_version``, and replaying them on top of an unseen commit
+    could resurrect rows that commit removed."""
+    version = read_version + 1
+    cpath = _commit_path(os.path.join(table_path, "_delta_log"), version)
+    try:
+        fd = os.open(cpath, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
+    except FileExistsError:
+        raise DeltaProtocolError(f"concurrent commit at version {version}; re-run") from None
+    with os.fdopen(fd, "w") as fh:
+        fh.write(_commit_payload(actions))
+    return version
 
 
 def _stage_files(
@@ -702,7 +772,7 @@ def write_delta(
 
     # Phase 2: atomic commit with optimistic retry.
     next_version = (latest + 1) if latest is not None else 0
-    payload = "\n".join(json.dumps(a, separators=(",", ":")) for a in actions) + "\n"
+    payload = _commit_payload(actions)
     while True:
         cpath = _commit_path(log_dir, next_version)
         try:
@@ -715,72 +785,121 @@ def write_delta(
         return next_version
 
 
-# Above this many distinct single-column keys, merge pruning falls back
-# from the exact key-set probe to the min/max envelope (the collected key
-# list must stay driver-small).
+# Up to this many distinct source keys come back from the merge census for
+# exact per-file pruning; above it pruning falls back to the per-column
+# min/max envelope (the collected key list must stay driver-small).
 _MERGE_KEYSET_CAP = 100_000
+
+# Target size of the files a rewrite writes: OPTIMIZE's default, and what
+# a merge sizes its rewritten files by.
+_TARGET_FILE_BYTES = 128 * 1024 * 1024
+
+
+def _file_count(total_bytes: int, target_bytes: int, floor: int = 1) -> int:
+    """Output files for a rewrite of ``total_bytes``: one per
+    ``target_bytes``, and never fewer than ``floor``."""
+    return max(1, floor, -(-int(total_bytes) // target_bytes))
+
+
+def _clustered(df: DataFrame, n_files: int, keys: list[str]) -> DataFrame:
+    """Range-partition into ``n_files`` key ranges, each sorted by key, so the
+    written files carry disjoint, tight min/max stats on ``keys``."""
+    return df.repartitionByRange(n_files, *keys).sortWithinPartitions(*keys)
+
+
+def _num_records(adds) -> int | None:
+    """Rows in ``adds`` from their ``numRecords`` stats; None if any file
+    lacks them."""
+    total = 0
+    for add in adds:
+        try:
+            stats = add["stats"]
+            total += (json.loads(stats) if isinstance(stats, str) else stats)["numRecords"]
+        except (KeyError, TypeError, ValueError):
+            return None
+    return total
+
+
+def _source_census(source_df: DataFrame, on: list[str]):
+    """Row count, duplicate-key check and pruning keys of a merge source.
+
+    One job: per-key row counts, sorted by key and capped at
+    ``_MERGE_KEYSET_CAP + 1`` groups (a top-k, bounded per task). Up to the
+    cap it returns ``(rows, keys, None)`` with ``keys`` the sorted distinct
+    NULL-free key tuples. Above it, one aggregate over the same counts
+    returns ``(rows, None, bounds)`` with each key column's (min, max).
+    Raises if a NULL-free key occurs more than once (Delta's MERGE rule)."""
+    counts = source_df.groupBy(*on).agg(F.count(F.lit(1)).alias("__n"))
+    groups = counts.orderBy(*on).limit(_MERGE_KEYSET_CAP + 1).collect()
+    if len(groups) <= _MERGE_KEYSET_CAP:
+        rows = sum(g["__n"] for g in groups)
+        keyed = [g for g in groups if all(g[k] is not None for k in on)]
+        dup = any(g["__n"] > 1 for g in keyed)
+        keys, bounds = [tuple(g[k] for k in on) for g in keyed], None
+    else:
+        nonnull = reduce(lambda a, b: a & b, [F.col(k).isNotNull() for k in on])
+        agg = counts.agg(
+            F.sum("__n").alias("__rows"),
+            F.max(F.when(nonnull, F.col("__n"))).alias("__dup"),
+            *[F.min(c).alias(f"__lo_{c}") for c in on],
+            *[F.max(c).alias(f"__hi_{c}") for c in on],
+        ).collect()[0]
+        rows, dup, keys = agg["__rows"], (agg["__dup"] or 0) > 1, None
+        bounds = [(agg[f"__lo_{c}"], agg[f"__hi_{c}"]) for c in on]
+    if dup:
+        raise ValueError("source has multiple rows per merge key")
+    return rows, keys, bounds
 
 
 def _files_possibly_matching(
-    source_df: DataFrame, snap: DeltaSnapshot, on: list[str]
+    snap: DeltaSnapshot, on: list[str], keys: list[tuple] | None, bounds
 ) -> dict[str, dict]:
-    """Target files that MAY contain a key present in ``source_df``.
+    """Target files that MAY contain one of the source's keys.
 
-    Single-column keys (the overwhelmingly common merge shape): collect the
-    distinct key set (capped) and probe each file's [min,max] with a binary
-    search — an insert-heavy source no longer stretches one envelope over
-    the whole table, so a merge touching 2 clustered keys rewrites the 1-2
-    files that hold them. Compound keys or oversized key sets fall back to
-    the per-column min/max envelope (still conservative, never wrong)."""
+    Single-column keys with the census key set: probe each file's
+    [min,max] with a binary search over the sorted keys — an insert-heavy
+    source no longer stretches one envelope over the whole table, so a
+    merge touching 2 clustered keys rewrites the 1-2 files that hold them.
+    Compound keys or oversized key sets use the per-column min/max envelope
+    (still conservative, never wrong)."""
     part_cols = snap.partition_columns
+    if keys is not None and not keys:
+        return {}  # all-NULL-key source: nothing can match
+    if keys is not None and len(on) == 1:
+        import bisect
 
-    if len(on) == 1:
-        k = on[0]
-        keys_df = source_df.na.drop(subset=[k]).select(k).distinct()
-        keys = [r[0] for r in keys_df.limit(_MERGE_KEYSET_CAP + 1).collect()]
-        if not keys:
-            return {}
-        if len(keys) <= _MERGE_KEYSET_CAP:
-            import bisect
+        k, flat = on[0], [key[0] for key in keys]
 
-            keys.sort()
+        def may_match(add: dict) -> bool:
+            if k in part_cols:
+                return any(_file_may_match(add, k, "=", key, part_cols) for key in flat)
+            stats = add.get("stats")
+            if not stats:
+                return True
+            try:
+                parsed = json.loads(stats) if isinstance(stats, str) else stats
+            except (TypeError, ValueError):
+                return True
+            lo = _coerce_like(parsed.get("minValues", {}).get(k), flat[0])
+            hi = _coerce_like(parsed.get("maxValues", {}).get(k), flat[0])
+            if lo is None or hi is None:
+                return True
+            try:
+                i = bisect.bisect_left(flat, lo)
+            except TypeError:
+                return True
+            return i < len(flat) and flat[i] <= hi
 
-            def may_match(add: dict) -> bool:
-                if k in part_cols:
-                    return any(
-                        _file_may_match(add, k, "=", key, part_cols) for key in keys
-                    )
-                stats = add.get("stats")
-                if not stats:
-                    return True
-                try:
-                    parsed = json.loads(stats) if isinstance(stats, str) else stats
-                except (TypeError, ValueError):
-                    return True
-                lo = _coerce_like(parsed.get("minValues", {}).get(k), keys[0])
-                hi = _coerce_like(parsed.get("maxValues", {}).get(k), keys[0])
-                if lo is None or hi is None:
-                    return True
-                try:
-                    i = bisect.bisect_left(keys, lo)
-                except TypeError:
-                    return True
-                return i < len(keys) and keys[i] <= hi
+        return {p: a for p, a in snap.adds.items() if may_match(a)}
 
-            return {p: a for p, a in snap.adds.items() if may_match(a)}
-
-    # Fallback: per-column min/max envelope.
-    bounds = source_df.na.drop(subset=on).agg(
-        *[F.min(c).alias(f"lo_{c}") for c in on],
-        *[F.max(c).alias(f"hi_{c}") for c in on],
-    ).collect()[0]
+    if keys is not None:
+        bounds = [(min(col), max(col)) for col in zip(*keys)]
     overlap: list[tuple[str, str, object]] = []
-    for c in on:
-        lo, hi = bounds[f"lo_{c}"], bounds[f"hi_{c}"]
+    for c, (lo, hi) in zip(on, bounds):
         if lo is not None:
             overlap.extend([(c, ">=", lo), (c, "<=", hi)])
     if not overlap:
-        return {}  # all-NULL-key source: nothing can match
+        return {}
     return prune_adds(snap.adds, overlap, part_cols)
 
 
@@ -796,18 +915,31 @@ def merge_delta(
     delta_to_postgres_scd.py:242-261 — generalized beyond SCD2):
     copy-on-write at FILE granularity, driven by the per-file stats.
 
-    1. One tiny agg computes the source's key-range envelope.
-    2. ``prune_adds`` keeps only target files whose min/max key ranges
-       overlap that envelope — every other file PROVABLY contains no
-       matching key and is never read, never rewritten. At 100 TB with
-       key-clustered files (compaction/Z-order keep them clustered), a
-       point-ish merge touches a handful of files instead of the table.
-    3. Touched files re-emit: unmatched rows kept, matched rows replaced
-       by the source row (``when_matched="update"``) or dropped
-       (``"delete"``); source rows matching nothing append as inserts.
+    1. One census job over the source returns its row count, its sorted
+       distinct keys (up to ``_MERGE_KEYSET_CAP``) and with them the
+       duplicate-key check; above the cap one more aggregate gives the
+       count, the check and the per-column key envelope.
+    2. Only target files whose min/max key range holds a source key (or
+       overlaps the envelope) are touched — every other file PROVABLY
+       contains no matching key and is never read, never rewritten. At
+       100 TB with key-clustered files, a point-ish merge touches a
+       handful of files instead of the table.
+    3. One write of ``kept ∪ source``: the touched files' rows whose key
+       is not in the source, plus the source (matched rows replace, the
+       rest insert); the source alone when no file is touched. The other
+       ``when_matched``/``insert_not_matched`` modes narrow the source part
+       with a semi/anti join on the touched keys. The rows are range-
+       clustered and key-sorted into ``max(touched files, ⌈bytes / 128
+       MiB⌉)`` files, so the next merge touches as few as possible.
     4. One atomic commit: removes for touched files + adds for their
        replacements. Readers of the old version are unaffected; time
        travel keeps working.
+
+    ``rows_matched`` (target rows matched) comes from the touched and
+    written files' ``numRecords`` stats and the census count; a join count
+    runs only when stats are missing or the mode leaves it undetermined
+    (``"delete"`` with inserts, ``"update"`` without). With range
+    sampling, a merge runs 2-3 jobs.
 
     Multiple source rows hitting one key raise (same rule as Delta's
     MERGE); NULL-keyed source rows never match (equality is
@@ -829,35 +961,46 @@ def merge_delta(
         raise ValueError(f"merge keys not in schema: {missing}")
     source_df = source_df.select(target_cols)
 
-    dup = (
-        source_df.na.drop(subset=on)
-        .groupBy(*on)
-        .count()
-        .filter(F.col("count") > 1)
-        .limit(1)
-        .count()
-    )
-    if dup:
-        raise ValueError("source has multiple rows per merge key")
-
-    touched = _files_possibly_matching(source_df, snap, on)
+    n_source, keys, bounds = _source_census(source_df, on)
+    touched = _files_possibly_matching(snap, on, keys, bounds)
     untouched = {p: a for p, a in snap.adds.items() if p not in touched}
 
     touched_df = _df_for_adds(spark, snap, touched)
-    matched_keys = touched_df.select(on).join(source_df.select(on), on, "left_semi")
-    kept = touched_df.join(source_df.select(on), on, "left_anti")
-    matched_src = source_df.join(touched_df.select(on), on, "left_semi")
-    inserts = source_df.join(touched_df.select(on), on, "left_anti")
+    # Source rows to write: all (update + insert), those a touched file
+    # holds the key of (update only), the others (delete + insert), none.
+    src_part: DataFrame | None = source_df if insert_not_matched else None
+    if touched and (when_matched == "delete") == insert_not_matched:
+        how = "left_semi" if when_matched == "update" else "left_anti"
+        src_part = source_df.join(touched_df.select(on), on, how)
+    if touched:
+        kept = touched_df.join(source_df.select(on), on, "left_anti")
+        new_data = kept if src_part is None else kept.unionByName(src_part)
+    else:
+        new_data = src_part
 
-    pieces = [kept]
-    if when_matched == "update":
-        pieces.append(matched_src)
-    if insert_not_matched:
-        pieces.append(inserts)
-    new_data = reduce(lambda a, b: a.unionByName(b), pieces)
-    n_matched = matched_keys.count()
+    adds: list[dict] = []
+    if new_data is not None:
+        # Bytes to write: the touched files, plus the source at the table's
+        # mean bytes per row (stats only, no job).
+        table_rows = _num_records(snap.adds.values()) or 0
+        table_bytes = sum(int(a.get("size") or 0) for a in snap.adds.values())
+        est = sum(int(a.get("size") or 0) for a in touched.values())
+        est += n_source * table_bytes // table_rows if table_rows else 0
+        n_files = _file_count(est, _TARGET_FILE_BYTES, floor=len(touched))
+        adds = _stage_files(_clustered(new_data, n_files, on), table_path, snap.partition_columns)
 
-    adds = _stage_files(new_data, table_path, snap.partition_columns)
+    src_written = {("update", True): n_source, ("delete", False): 0}.get(
+        (when_matched, insert_not_matched)
+    )
+    touched_rows = _num_records(touched.values())
+    written_rows = _num_records(a["add"] for a in adds)
+    if not touched:
+        n_matched = 0
+    elif None in (src_written, touched_rows, written_rows):
+        n_matched = touched_df.select(on).join(source_df.select(on), on, "left_semi").count()
+    else:
+        n_matched = touched_rows + src_written - written_rows
+
     ts = int(time.time() * 1000)
     actions: list[dict] = [
         {
@@ -884,20 +1027,8 @@ def merge_delta(
             {"remove": {"path": path, "deletionTimestamp": ts, "dataChange": True}}
         )
     actions.extend(adds)
-
-    log_dir = os.path.join(table_path, "_delta_log")
-    payload = "\n".join(json.dumps(a, separators=(",", ":")) for a in actions) + "\n"
-    cpath = _commit_path(log_dir, snap.version + 1)
-    try:
-        fd = os.open(cpath, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    except FileExistsError:
-        raise DeltaProtocolError(
-            f"concurrent commit at version {snap.version + 1}; re-run the merge"
-        ) from None
-    with os.fdopen(fd, "w") as fh:
-        fh.write(payload)
     return {
-        "version": snap.version + 1,
+        "version": _commit_next(table_path, snap.version, actions),
         "files_rewritten": len(touched),
         "files_skipped": len(untouched),
         "files_added": len(adds),
@@ -923,12 +1054,15 @@ def _rewrite_matching(
     table_path: str,
     where: list[tuple[str, str, object]],
     operation: str,
-    transform,
+    rewrite,
 ) -> dict:
     """Shared DELETE/UPDATE engine: rewrite only files that may contain a
-    matching row (stats-pruned); within them, keep non-matching rows as-is
-    and replace matching rows with ``transform(matching_df)`` (empty for
-    DELETE). One atomic commit; untouched files never read."""
+    matching row (stats-pruned) as ``rewrite(touched_df, pred)`` — one pass
+    that keeps non-matching rows as-is and drops (DELETE) or re-emits
+    (UPDATE) matching ones. Matching rows are counted by an observed metric
+    of that same write, so a rewrite is one Spark job; when none match, the
+    staged files are dropped and nothing is committed. One atomic commit;
+    untouched files never read."""
     snap = snapshot(spark, table_path)
     for c, op, _ in where:
         if op not in _SKIP_OPS:
@@ -940,22 +1074,25 @@ def _rewrite_matching(
     untouched = {p: a for p, a in snap.adds.items() if p not in touched}
     pred = _predicate_expr(where)
 
-    touched_df = _df_for_adds(spark, snap, touched)
-    matching = touched_df.filter(pred)
-    n_affected = matching.count()
+    adds: list[dict] = []
+    n_affected = 0
+    if touched:
+        matched = Observation()
+        touched_df = _df_for_adds(spark, snap, touched).observe(
+            matched, F.count_if(pred).alias("n")
+        )
+        adds = _stage_files(rewrite(touched_df, pred), table_path, snap.partition_columns)
+        n_affected = matched.get["n"]
     if n_affected == 0:
         # No rows match: nothing to rewrite, no commit needed.
+        for a in adds:
+            os.remove(os.path.join(table_path, a["add"]["path"]))
         return {
             "version": snap.version,
             "rows_affected": 0,
             "files_rewritten": 0,
             "files_skipped": len(snap.adds),
         }
-    kept = touched_df.filter(~pred | F.isnull(pred))
-    replacement = transform(matching)
-    new_data = kept.unionByName(replacement) if replacement is not None else kept
-
-    adds = _stage_files(new_data, table_path, snap.partition_columns)
     ts = int(time.time() * 1000)
     actions: list[dict] = [
         {
@@ -980,17 +1117,7 @@ def _rewrite_matching(
             {"remove": {"path": path, "deletionTimestamp": ts, "dataChange": True}}
         )
     actions.extend(adds)
-    log_dir = os.path.join(table_path, "_delta_log")
-    payload = "\n".join(json.dumps(a, separators=(",", ":")) for a in actions) + "\n"
-    cpath = _commit_path(log_dir, snap.version + 1)
-    try:
-        fd = os.open(cpath, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    except FileExistsError:
-        raise DeltaProtocolError(
-            f"concurrent commit at version {snap.version + 1}; re-run"
-        ) from None
-    with os.fdopen(fd, "w") as fh:
-        fh.write(payload)
+    _commit_next(table_path, snap.version, actions)
     return {
         "version": snap.version + 1,
         "rows_affected": n_affected,
@@ -1007,7 +1134,9 @@ def delete_delta(
     those are rewritten without the matching rows. Returns
     ``rows_affected`` — the reference's DML-with-rowcount surface
     (query_sync_table.py:122-125) as an engine operator."""
-    return _rewrite_matching(spark, table_path, where, "DELETE", lambda m: None)
+    return _rewrite_matching(
+        spark, table_path, where, "DELETE", lambda df, pred: df.filter(~pred | F.isnull(pred))
+    )
 
 
 def update_delta(
@@ -1018,18 +1147,22 @@ def update_delta(
 ) -> dict:
     """UPDATE t SET col = expr, … WHERE … — matching rows re-emitted with
     the SET expressions applied (values or Column expressions over the old
-    row), non-matching rows byte-identical, untouched files skipped."""
+    row, all of them seeing the old row as in SQL), non-matching rows
+    byte-identical, untouched files skipped."""
     from pyspark.sql import Column
 
-    def apply_set(matching: DataFrame) -> DataFrame:
-        out = matching
-        for c, v in set_exprs.items():
-            if c not in matching.columns:
-                raise ValueError(f"unknown SET column {c!r}")
-            col_type = dict((f.name, f.dataType) for f in matching.schema.fields)[c]
-            expr = v if isinstance(v, Column) else F.lit(v)
-            out = out.withColumn(c, expr.cast(col_type))
-        return out.select(matching.columns)
+    def apply_set(df: DataFrame, pred) -> DataFrame:
+        types = {f.name: f.dataType for f in df.schema.fields}
+        unknown = [c for c in set_exprs if c not in types]
+        if unknown:
+            raise ValueError(f"unknown SET column {unknown[0]!r}")
+
+        def assigned(c: str):
+            v = set_exprs[c]
+            new = (v if isinstance(v, Column) else F.lit(v)).cast(types[c])
+            return F.when(pred, new).otherwise(F.col(c)).alias(c)
+
+        return df.select([assigned(c) if c in set_exprs else F.col(c) for c in df.columns])
 
     return _rewrite_matching(spark, table_path, where, "UPDATE", apply_set)
 
@@ -1122,7 +1255,7 @@ def read_delta_changes(
 def optimize_delta(
     spark: SparkSession,
     table_path: str,
-    target_file_bytes: int = 128 * 1024 * 1024,
+    target_file_bytes: int = _TARGET_FILE_BYTES,
     zorder_by: list[str] | None = None,
     sort_by: list[str] | None = None,
 ) -> dict:
@@ -1162,7 +1295,7 @@ def optimize_delta(
             "bytes": 0,
         }
     total_bytes = sum(int(a.get("size") or 0) for a in scope.values())
-    n_out = max(1, -(-total_bytes // target_file_bytes))
+    n_out = _file_count(total_bytes, target_file_bytes)
 
     df = _df_for_adds(spark, snap, scope)
     if zorder_by:
@@ -1185,7 +1318,7 @@ def optimize_delta(
             .drop("__zkey")
         )
     elif sort_by:
-        out = df.repartitionByRange(n_out, *sort_by).sortWithinPartitions(*sort_by)
+        out = _clustered(df, n_out, sort_by)
     else:
         out = df.repartition(n_out)
 
@@ -1215,17 +1348,7 @@ def optimize_delta(
             {"remove": {"path": path, "deletionTimestamp": ts, "dataChange": False}}
         )
     actions.extend(adds)
-    log_dir = os.path.join(table_path, "_delta_log")
-    payload = "\n".join(json.dumps(a, separators=(",", ":")) for a in actions) + "\n"
-    cpath = _commit_path(log_dir, snap.version + 1)
-    try:
-        fd = os.open(cpath, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    except FileExistsError:
-        raise DeltaProtocolError(
-            f"concurrent commit at version {snap.version + 1}; re-run"
-        ) from None
-    with os.fdopen(fd, "w") as fh:
-        fh.write(payload)
+    _commit_next(table_path, snap.version, actions)
     return {
         "version": snap.version + 1,
         "files_removed": len(scope),
@@ -1239,119 +1362,27 @@ def write_checkpoint(spark: SparkSession, table_path: str, version: int | None =
     latest) and point ``_last_checkpoint`` at it. Readers then replay only
     newer JSON commits — bounding log-replay cost as commits accumulate
     (the log would otherwise grow O(total commits ever)).
-    """
-    from pyspark.sql.types import (
-        ArrayType,
-        BooleanType,
-        IntegerType,
-        LongType,
-        MapType,
-        StringType,
-        StructField,
-    )
 
+    The file is written by pyarrow on the driver in ``_CHECKPOINT_SCHEMA``
+    (no Spark job): one action per row, the other action columns null.
+    """
     log_dir = os.path.join(table_path, "_delta_log")
     snap = snapshot(spark, table_path, version)
-    version = snap.version
-
-    proto_t = StructType(
-        [
-            StructField("minReaderVersion", IntegerType()),
-            StructField("minWriterVersion", IntegerType()),
-        ]
-    )
-    meta_t = StructType(
-        [
-            StructField("id", StringType()),
-            StructField("name", StringType()),
-            StructField("description", StringType()),
-            StructField(
-                "format",
-                StructType(
-                    [
-                        StructField("provider", StringType()),
-                        StructField("options", MapType(StringType(), StringType())),
-                    ]
-                ),
-            ),
-            StructField("schemaString", StringType()),
-            StructField("partitionColumns", ArrayType(StringType())),
-            # configuration MUST round-trip through checkpoints: CHECK
-            # constraints live in delta.constraints.* keys, and a snapshot
-            # rebuilt from a checkpoint that dropped them would silently
-            # stop enforcing (and the next overwrite would erase them)
-            StructField("configuration", MapType(StringType(), StringType())),
-            StructField("createdTime", LongType()),
-        ]
-    )
-    add_t = StructType(
-        [
-            StructField("path", StringType()),
-            StructField("partitionValues", MapType(StringType(), StringType())),
-            StructField("size", LongType()),
-            StructField("modificationTime", LongType()),
-            StructField("dataChange", BooleanType()),
-            StructField("stats", StringType()),
-        ]
-    )
-    ckpt_schema = StructType(
-        [
-            StructField("protocol", proto_t),
-            StructField("metaData", meta_t),
-            StructField("add", add_t),
-        ]
-    )
     proto = snap.protocol or {"minReaderVersion": 1, "minWriterVersion": 2}
-    meta = snap.metadata or {}
-    rows: list[tuple] = [
-        ((proto.get("minReaderVersion", 1), proto.get("minWriterVersion", 2)), None, None),
-        (
-            None,
-            (
-                meta.get("id"),
-                meta.get("name"),
-                meta.get("description"),
-                (
-                    (meta.get("format") or {}).get("provider", "parquet"),
-                    dict((meta.get("format") or {}).get("options") or {}),
-                ),
-                meta.get("schemaString"),
-                list(meta.get("partitionColumns") or []),
-                dict(meta.get("configuration") or {}),
-                meta.get("createdTime"),
-            ),
-            None,
-        ),
+    meta = dict(snap.metadata or {})
+    fmt = meta.get("format") or {}
+    meta["format"] = {"provider": fmt.get("provider", "parquet"), "options": fmt.get("options") or {}}
+    rows = [{"protocol": proto}, {"metaData": meta}] + [
+        {"add": {**add, "dataChange": bool(add.get("dataChange", True))}}
+        for add in snap.adds.values()
     ]
-    for add in snap.adds.values():
-        rows.append(
-            (
-                None,
-                None,
-                (
-                    add["path"],
-                    dict(add.get("partitionValues") or {}),
-                    int(add.get("size") or 0),
-                    int(add.get("modificationTime") or 0),
-                    bool(add.get("dataChange", True)),
-                    add.get("stats"),
-                ),
-            )
-        )
-    stage = os.path.join(log_dir, f"_ckpt_stage_{uuid.uuid4().hex[:8]}")
-    spark.createDataFrame(rows, ckpt_schema).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(stage)
-    part = next(f for f in os.listdir(stage) if f.endswith(".parquet"))
-    final = os.path.join(log_dir, f"{version:0{_COMMIT_DIGITS}d}.checkpoint.parquet")
-    os.replace(os.path.join(stage, part), final)
-    for root, dirs, files in os.walk(stage, topdown=False):
-        for f_ in files:
-            os.remove(os.path.join(root, f_))
-        os.rmdir(root)
+    stage = os.path.join(log_dir, f"_ckpt_stage_{uuid.uuid4().hex[:8]}.parquet")
+    pq.write_table(pa.Table.from_pylist(rows, schema=_CHECKPOINT_SCHEMA), stage)
+    final = os.path.join(log_dir, f"{snap.version:0{_COMMIT_DIGITS}d}.checkpoint.parquet")
+    os.replace(stage, final)
     with open(os.path.join(log_dir, "_last_checkpoint"), "w") as fh:
-        json.dump({"version": version, "size": len(rows)}, fh)
-    return version
+        json.dump({"version": snap.version, "size": len(rows)}, fh)
+    return snap.version
 
 
 def vacuum(spark: SparkSession, table_path: str) -> list[str]:
@@ -1455,13 +1486,8 @@ def convert_to_delta(spark: SparkSession, parquet_path: str) -> int:
         if stats:
             add_action["stats"] = stats
         actions.append({"add": add_action})
-    log_dir = os.path.join(parquet_path, "_delta_log")
-    os.makedirs(log_dir, exist_ok=True)
-    payload = "\n".join(json.dumps(a, separators=(",", ":")) for a in actions) + "\n"
-    fd = os.open(_commit_path(log_dir, 0), os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    with os.fdopen(fd, "w") as fh:
-        fh.write(payload)
-    return 0
+    os.makedirs(os.path.join(parquet_path, "_delta_log"), exist_ok=True)
+    return _commit_next(parquet_path, -1, actions)
 
 def restore_delta(
     spark: SparkSession, table_path: str, version: int
@@ -1520,17 +1546,7 @@ def restore_delta(
         add["dataChange"] = True
         actions.append({"add": add})
 
-    log_dir = os.path.join(table_path, "_delta_log")
-    payload = "\n".join(json.dumps(a, separators=(",", ":")) for a in actions) + "\n"
-    cpath = _commit_path(log_dir, cur.version + 1)
-    try:
-        fd = os.open(cpath, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    except FileExistsError:
-        raise DeltaProtocolError(
-            f"concurrent commit at version {cur.version + 1}; re-run the restore"
-        ) from None
-    with os.fdopen(fd, "w") as fh:
-        fh.write(payload)
+    _commit_next(table_path, cur.version, actions)
     return {
         "version": cur.version + 1,
         "restored_to": version,
@@ -1589,17 +1605,7 @@ def add_check_constraint(
         {"protocol": {"minReaderVersion": 1, "minWriterVersion": 3}},
         {"metaData": meta},
     ]
-    log_dir = os.path.join(table_path, "_delta_log")
-    payload = "\n".join(json.dumps(a, separators=(",", ":")) for a in actions) + "\n"
-    cpath = _commit_path(log_dir, snap.version + 1)
-    try:
-        fd = os.open(cpath, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    except FileExistsError:
-        raise DeltaProtocolError(
-            f"concurrent commit at version {snap.version + 1}"
-        ) from None
-    with os.fdopen(fd, "w") as fh:
-        fh.write(payload)
+    _commit_next(table_path, snap.version, actions)
     return snap.version + 1
 
 
@@ -1625,15 +1631,5 @@ def drop_check_constraint(
         },
         {"metaData": meta},
     ]
-    log_dir = os.path.join(table_path, "_delta_log")
-    payload = "\n".join(json.dumps(a, separators=(",", ":")) for a in actions) + "\n"
-    cpath = _commit_path(log_dir, snap.version + 1)
-    try:
-        fd = os.open(cpath, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    except FileExistsError:
-        raise DeltaProtocolError(
-            f"concurrent commit at version {snap.version + 1}"
-        ) from None
-    with os.fdopen(fd, "w") as fh:
-        fh.write(payload)
+    _commit_next(table_path, snap.version, actions)
     return snap.version + 1

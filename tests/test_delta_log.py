@@ -238,11 +238,46 @@ class TestMaintenance:
         write_delta(spark.range(0, 4), t)
         write_delta(spark.range(4, 8), t)
         assert write_checkpoint(spark, t) == 1
+        # the pyarrow-written file reads in Spark with the struct/map schema
+        # of a Spark-written checkpoint, and in DuckDB
+        import duckdb
+
+        ckpt = os.path.join(t, "_delta_log", f"{1:020d}.checkpoint.parquet")
+        assert spark.read.parquet(ckpt).schema.simpleString() == (
+            "struct<protocol:struct<minReaderVersion:int,minWriterVersion:int>,"
+            "metaData:struct<id:string,name:string,description:string,"
+            "format:struct<provider:string,options:map<string,string>>,"
+            "schemaString:string,partitionColumns:array<string>,"
+            "configuration:map<string,string>,createdTime:bigint>,"
+            "add:struct<path:string,partitionValues:map<string,string>,size:bigint,"
+            "modificationTime:bigint,dataChange:boolean,stats:string>>"
+        )
+        with open(os.path.join(t, "_delta_log", "_last_checkpoint")) as fh:
+            size = json.load(fh)["size"]
+        n_adds = duckdb.sql(
+            f"SELECT count(add.path) FROM read_parquet('{ckpt}')"
+        ).fetchone()[0]
+        assert n_adds == size - 2 == len(snapshot(spark, t).adds)
         # pre-checkpoint commits can vacuum away; reads still work
         os.remove(os.path.join(t, "_delta_log", f"{0:020d}.json"))
         os.remove(os.path.join(t, "_delta_log", f"{1:020d}.json"))
         write_delta(spark.range(8, 10), t)
         assert _rows(read_delta(spark, t), "id") == [(i,) for i in range(10)]
+
+    def test_checkpoint_and_replay_run_no_jobs(self, spark, tmp_path, count_jobs):
+        from delta_unity_duckdb_spark.sources.delta_log import write_checkpoint
+
+        t = str(tmp_path / "m0")
+        df = spark.createDataFrame([(i, i % 2) for i in range(10)], ["id", "k"])
+        write_delta(df, t, partition_by=["k"])
+        add_paths = set(snapshot(spark, t).adds)
+        v, jobs = count_jobs(lambda: write_checkpoint(spark, t))
+        assert (v, jobs) == (0, 0)
+        os.remove(os.path.join(t, "_delta_log", f"{0:020d}.json"))
+        snap, jobs = count_jobs(lambda: snapshot(spark, t))
+        assert jobs == 0 and snap.version == 0 and set(snap.adds) == add_paths
+        assert snap.partition_columns == ["k"]
+        assert all(set(a["partitionValues"]) == {"k"} for a in snap.adds.values())
 
     def test_checkpoint_partitioned_roundtrip(self, spark, tmp_path):
         from delta_unity_duckdb_spark.sources.delta_log import write_checkpoint
@@ -482,6 +517,62 @@ class TestMerge:
         got = {r["id"]: r["tag"] for r in read_delta(spark, t).collect()}
         assert got[4] == "upd" and 5000 not in got and len(got) == 1000
 
+    def test_insert_only_merge_adds_one_file(self, spark, tmp_path, count_jobs):
+        from delta_unity_duckdb_spark.sources.delta_log import merge_delta
+
+        t = self._target(spark, tmp_path, "ins1")
+        src = self._src(spark, [(2000 + i, i, "new") for i in range(50)])
+        res, jobs = count_jobs(lambda: merge_delta(src, t, on=["id"]))
+        assert (res["files_rewritten"], res["files_added"], res["rows_matched"]) == (0, 1, 0)
+        assert len(snapshot(spark, t).adds) == 5
+        assert jobs == 2  # the source-key census, then the write
+        assert read_delta(spark, t).count() == 1050
+
+    def test_update_merge_writes_disjoint_key_ranges(self, spark, tmp_path):
+        from delta_unity_duckdb_spark.sources.delta_log import merge_delta
+
+        t = self._target(spark, tmp_path, "rng")
+        keys = [10, 20, 30, 400, 410, 420]
+        src = self._src(spark, [(k, -k, "upd") for k in keys] + [(5000, 1, "new")])
+        res = merge_delta(src, t, on=["id"])
+        assert res["files_rewritten"] == 2 and res["rows_matched"] == 6
+        with open(os.path.join(t, "_delta_log", f"{res['version']:020d}.json")) as fh:
+            adds = [json.loads(line)["add"] for line in fh if '"add"' in line]
+        ranges = sorted(
+            (st["minValues"]["id"], st["maxValues"]["id"])
+            for st in (json.loads(a["stats"]) for a in adds)
+        )
+        assert len(ranges) == res["files_added"] == 2
+        assert all(a[1] < b[0] for a, b in zip(ranges, ranges[1:]))
+        got = {r["id"]: r["v"] for r in read_delta(spark, t).collect()}
+        assert all(got[k] == -k for k in keys) and got[5000] == 1 and len(got) == 1001
+
+    @pytest.mark.parametrize(
+        "when_matched, insert, rows",
+        [("update", True, 1002), ("update", False, 1000), ("delete", True, 1000), ("delete", False, 998)],
+    )
+    def test_rows_matched_in_every_mode(self, spark, tmp_path, when_matched, insert, rows):
+        from delta_unity_duckdb_spark.sources.delta_log import merge_delta
+
+        t = self._target(spark, tmp_path, f"modes_{when_matched}_{insert}")
+        src = self._src(spark, [(3, 0, "x"), (600, 0, "x"), (7000, 0, "x"), (None, 0, "x")])
+        res = merge_delta(src, t, on=["id"], when_matched=when_matched, insert_not_matched=insert)
+        assert res["rows_matched"] == 2
+        assert read_delta(spark, t).count() == rows
+
+    def test_census_above_cap_falls_back_to_envelope(self, spark, tmp_path, monkeypatch):
+        from delta_unity_duckdb_spark.sources import delta_log
+        from delta_unity_duckdb_spark.sources.delta_log import merge_delta
+
+        monkeypatch.setattr(delta_log, "_MERGE_KEYSET_CAP", 2)
+        t = self._target(spark, tmp_path, "cap")
+        with pytest.raises(ValueError, match="multiple rows"):
+            merge_delta(self._src(spark, [(1, 0, "a"), (2, 0, "b"), (3, 0, "c"), (3, 1, "d")]), t, on=["id"])
+        res = merge_delta(self._src(spark, [(5, -5, "u"), (6, -6, "u"), (7, -7, "u")]), t, on=["id"])
+        assert res["rows_matched"] == 3 and res["files_skipped"] == 3
+        got = {r["id"]: r["v"] for r in read_delta(spark, t).collect()}
+        assert (got[5], got[6], got[7], got[8]) == (-5, -6, -7, 80) and len(got) == 1000
+
 
 class TestDml:
     """File-pruned DELETE / UPDATE with rowcount metrics."""
@@ -536,6 +627,37 @@ class TestDml:
         update_delta(spark, t, [("id", "=", 7)], {"v": -1})
         got = {r["id"]: r["v"] for r in read_delta(spark, t).collect()}
         assert got[7] == -1 and got[8] == 80
+
+    def test_update_and_delete_run_one_job(self, spark, tmp_path, count_jobs):
+        from delta_unity_duckdb_spark.sources.delta_log import delete_delta, update_delta
+
+        t = self._target(spark, tmp_path, "dml1")
+        res, jobs = count_jobs(
+            lambda: update_delta(spark, t, [("id", "<", 5)], {"v": F.col("v") + 1})
+        )
+        assert (res["rows_affected"], jobs) == (5, 1)
+        res, jobs = count_jobs(
+            lambda: delete_delta(spark, t, [("id", ">=", 100), ("id", "<", 110)])
+        )
+        assert (res["rows_affected"], jobs) == (10, 1)
+        assert read_delta(spark, t).count() == 990
+
+    def test_no_match_in_touched_file_leaves_no_files(self, spark, tmp_path):
+        from delta_unity_duckdb_spark.sources.delta_log import delete_delta
+
+        t = self._target(spark, tmp_path, "del0f")
+        before = sorted(os.listdir(t))
+        res = delete_delta(spark, t, [("v", "=", 15)])  # inside file 0's range
+        assert res["rows_affected"] == 0 and res["version"] == 0
+        assert sorted(os.listdir(t)) == before
+
+    def test_set_exprs_all_see_the_old_row(self, spark, tmp_path):
+        from delta_unity_duckdb_spark.sources.delta_log import update_delta
+
+        t = self._target(spark, tmp_path, "swap")
+        update_delta(spark, t, [("id", "=", 3)], {"id": F.col("v"), "v": F.col("id")})
+        got = {(r["id"], r["v"]) for r in read_delta(spark, t).collect()}
+        assert (30, 3) in got and (3, 30) not in got and len(got) == 1000
 
     def test_null_rows_survive_delete(self, spark, tmp_path):
         from delta_unity_duckdb_spark.sources.delta_log import delete_delta

@@ -4,6 +4,9 @@ rows, one current row per key)."""
 
 from __future__ import annotations
 
+import os
+
+import pytest
 from pyspark.sql import functions as F
 
 from delta_unity_duckdb_spark.operators.scd2 import (
@@ -127,3 +130,29 @@ def test_sync_scd2_materialized_lifecycle(spark, tmp_path):
     # third sync with no changes is a no-op
     s3 = sync_scd2(spark, b2, target, KEYS, TRACKED, ts("2024-03-01 00:00:00"))
     assert (s3["total_rows"], s3["current_rows"]) == (4, 3)
+
+
+def test_sync_scd2_runs_one_job(spark, tmp_path, count_jobs):
+    target = str(tmp_path / "one_job_scd")
+    sync_scd2(spark, _batch(spark, [(1, "active", "a")]), target, KEYS, TRACKED, ts("2024-01-01 00:00:00"))
+    b2 = _batch(spark, [(1, "done", "a"), (2, "new", "b")])
+    s2, jobs = count_jobs(
+        lambda: sync_scd2(spark, b2, target, KEYS, TRACKED, ts("2024-02-01 00:00:00"))
+    )
+    assert (s2["total_rows"], s2["current_rows"], jobs) == (3, 2, 1)
+    assert os.listdir(tmp_path) == ["one_job_scd"]
+
+
+def test_sync_scd2_failed_write_keeps_target(spark, tmp_path):
+    target = str(tmp_path / "kept_scd")
+    b1 = _batch(spark, [(1, "active", "a"), (2, "active", "b")])
+    sync_scd2(spark, b1, target, KEYS, TRACKED, ts("2024-01-01 00:00:00"))
+    before = sorted(tuple(r) for r in spark.read.parquet(target).collect())
+    bad = _batch(spark, [(1, "done", "a"), (3, "new", "c")]).withColumn(
+        "status",
+        F.when(F.col("mission_id") == 3, F.raise_error(F.lit("boom"))).otherwise(F.col("status")),
+    )
+    with pytest.raises(Exception, match="boom"):
+        sync_scd2(spark, bad, target, KEYS, TRACKED, ts("2024-02-01 00:00:00"))
+    assert sorted(tuple(r) for r in spark.read.parquet(target).collect()) == before
+    assert os.listdir(tmp_path) == ["kept_scd"]

@@ -11,7 +11,8 @@ predicts a driver-green CORRECTNESS row.
 Usage: python tools/strict_check.py [sf_dir] [name_substring ...]
 Multiple substrings OR together (a query runs if ANY matches); no
 substring sweeps every oracle-paired query. Writes one JSON line per
-query; summary line at the end.
+query; summary line at the end. Checks the checkout the script lives in,
+and exits 1 if any query fails, so it can gate a change.
 """
 
 from __future__ import annotations
@@ -24,7 +25,7 @@ import sys
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     filts = sys.argv[2:]
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from pyspark.sql import SparkSession
 
     from delta_unity_duckdb_spark.workload import ORACLE, QUERIES
@@ -61,7 +62,8 @@ def main():
         if not ok:
             bad.append(name)
     print(json.dumps({"summary": {"bad": bad, "n_bad": len(bad)}}))
+    return 1 if bad else 0
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main())
